@@ -223,8 +223,11 @@ object Bench {
     val summaryLine =
       s"""{"metric":"total_summary","value":${r3(recTotal)},"unit":"sec","queries_basis":"$basis","n_queries":${results.size},"raw_sequential_total":${r3(total)},"cpus":$cpusJson,"sf":"$sfDir"$prev$lfl}"""
     // Stop Spark BEFORE printing: with verbatim stdout passthrough a late
-    // shutdown log line must never land after the record lines.
-    spark.stop()
+    // shutdown log line must never land after the record lines. A failing
+    // shutdown is logged to stderr; the record lines still print.
+    try spark.stop()
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] spark.stop() failed: $e") }
     println(benchFullLine)
     println(totalLine)
     println(summaryLine)

@@ -154,8 +154,6 @@ final class AdtlParser private (
     if (java.nio.file.Paths.get(p).isAbsolute) p
     else specDir.map(d => s"$d/$p").getOrElse(p)
 
-  def tableNames: List[String] = spec.tables.keys.toList
-
   // ---- execution --------------------------------------------------------
 
   /** The CSV reader parseCsv uses (DictReader semantics — all strings). */
@@ -186,12 +184,32 @@ final class AdtlParser private (
     * the spec has groupBy tables and no orderCol was given. A splittable
     * multi-file read silently breaks scan-order lastNotNull semantics, so
     * strict callers make the order contract explicit or don't run.
+    *
+    * Scale bound: a spec with more than one table (or a parser built with
+    * [[withCachedInput]]) caches the scrubbed input at FULL source width —
+    * every column, materialized once in executor storage, with no column
+    * pruning through the cache — so each table reads it instead of
+    * re-scanning the source. Single-table parses run straight off the
+    * source scan.
     */
   def parseDataFrame(spark: SparkSession, source: DataFrame,
       skipValidation: Boolean = false,
       orderCol: Option[String] = None,
       requireOrderCol: Boolean = false): Map[String, DataFrame] = {
-    Uuid5Expr.register(spark) // codegen'd uuid5 for generate rules
+    if (orderCol.isEmpty && groupTables.nonEmpty) {
+      if (requireOrderCol)
+        throw new IllegalArgumentException(
+          s"requireOrderCol: groupBy tables (${groupTables.mkString(", ")}) " +
+            "need an explicit orderCol for deterministic lastNotNull/" +
+            "firstNonNull/list semantics under splittable multi-file reads")
+      System.err.println(
+        "Warning: groupBy tables use scan order as \"file order\" " +
+          "(monotonically_increasing_id). That is only the reference's file " +
+          "order while a single ordered scan produces ascending partition " +
+          "indexes — under splittable multi-file reads pass orderCol (an " +
+          "explicit sequence column) for deterministic lastNotNull/" +
+          "firstNonNull/list semantics at scale.")
+    }
     // release the previous parse's cached input (if this parser cached it):
     // repeated parses on one parser would otherwise accumulate
     // InMemoryRelations and leak executor storage memory. Lazy unpersist —
@@ -201,43 +219,8 @@ final class AdtlParser private (
       lastParseInput.foreach { case (prev, _) => prev.unpersist(false) }
       lastParseCached = false
     }
-    var df = orderCol match {
-      case Some(c) => source.withColumn(ROW_ID, col(c).cast("long"))
-      case None =>
-        val groupTables = spec.tables.collect {
-          case (t, m) if m.kind == "groupBy" => t }
-        if (requireOrderCol && groupTables.nonEmpty)
-          throw new IllegalArgumentException(
-            s"requireOrderCol: groupBy tables (${groupTables.mkString(", ")}) " +
-              "need an explicit orderCol for deterministic lastNotNull/" +
-              "firstNonNull/list semantics under splittable multi-file reads")
-        // the "never" cache policy re-scans the source per table action, so
-        // a scan-order id is not even stable WITHIN one parse — groupBy
-        // results could diverge table-to-table; enforce the doc'd contract
-        // instead of warning (withCachedInput pins one scan and is exempt)
-        if (groupTables.nonEmpty && inputCachePolicy == "never" && !cacheInput)
-          throw new IllegalArgumentException(
-            s"inputCachePolicy=never: groupBy tables (${groupTables.mkString(", ")}) " +
-              "need an explicit orderCol — each table's action re-scans the " +
-              "source and recomputes the scan-order id, so lastNotNull/" +
-              "firstNonNull/list results can diverge across tables and runs")
-        if (groupTables.nonEmpty)
-          System.err.println(
-            "Warning: groupBy tables use scan order as \"file order\" " +
-              "(monotonically_increasing_id). That is only the reference's file " +
-              "order while a single ordered scan produces ascending partition " +
-              "indexes — under splittable multi-file reads pass orderCol (an " +
-              "explicit sequence column) for deterministic lastNotNull/" +
-              "firstNonNull/list semantics at scale.")
-        source.withColumn(ROW_ID, monotonically_increasing_id())
-    }
-    spec.header.emptyFields.foreach { sentinel =>
-      df = df.select(df.columns.map { c =>
-        if (c == ROW_ID) col(c)
-        else when(col(c).cast("string") === sentinel, "")
-          .otherwise(col(c).cast("string")).as(c)
-      }: _*)
-    }
+    val (input, compiler) = prepareInput(spark, source, orderCol)
+    var df = input
     // Rebalance the parse input when its scan cannot feed the session's
     // cores (round-15 stage audit: the compiled rule chains — 10 date
     // parses/row on apply-dates specs, coercion CASE cascades — ran as
@@ -258,42 +241,68 @@ final class AdtlParser private (
     if (specParseCost + (if (spec.header.emptyFields.nonEmpty)
         df.columns.length - 1 else 0) >= RebalanceCostFloor)
       df = graft.ops.Pipeline.cpuRebalance(df, col(ROW_ID))
-    val doCache = cacheInput || (inputCachePolicy match {
-      case "never" => false
-      case "always" => true
-      case _ => spec.tables.size > 1
-    })
+    val doCache = cacheInput || spec.tables.size > 1
     if (doCache) df = df.cache()
-
-    val compiler = new RuleCompiler(
-      df.columns.filterNot(_ == ROW_ID).toSeq, spec.header, spec.dateFields.toSet,
-      registry, spec.namespaceUuid)
     lastParseInput = Some((df, compiler))
     lastParseCached = doCache
 
     spec.tables.map { case (tname, meta) =>
-      var out = meta.kind match {
-        case "constant" => execConstant(spark, tname)
-        case "oneToOne" => execOneToOne(df, compiler, tname)
-        case "groupBy" => execGroupBy(df, compiler, tname, meta)
-        case "oneToMany" => execOneToMany(df, compiler, tname, meta)
-      }
-      if (canonicalNumbers) {
-        // reference auto-int/float rendering for un-schema'd string attrs
-        val stringAttrs = out.schema.fields.collect {
-          case f if f.dataType == org.apache.spark.sql.types.StringType &&
-            coerceTypeFor(tname, f.name).isEmpty => f.name
-        }
-        stringAttrs.foreach { a =>
-          out = out.withColumn(a, compiler.canonicalNumber(col(a)))
-        }
-      }
-      val validated =
-        if (!skipValidation && spec.schemas.contains(tname))
-          withValidation(out, tname, meta)
-        else out
-      tname -> validated
+      tname -> tablePlan(spark, df, compiler, tname, meta, !skipValidation)
     }
+  }
+
+  private lazy val groupTables: List[String] =
+    spec.tables.collect { case (t, m) if m.kind == "groupBy" => t }.toList
+
+  /** The one parse input every entry point builds: `source` plus ROW_ID
+    * (`orderCol` cast to long; without one, a scan-order id — or lit(0)
+    * on a streaming frame, where only groupBy would read it and groupBy
+    * requires orderCol), with the emptyFields sentinel scrubbed to "",
+    * and the rule compiler over its source columns. */
+  private def prepareInput(spark: SparkSession, source: DataFrame,
+      orderCol: Option[String]): (DataFrame, RuleCompiler) = {
+    Uuid5Expr.register(spark) // codegen'd uuid5 for generate rules
+    val withId = source.withColumn(ROW_ID, orderCol match {
+      case Some(c) => col(c).cast("long")
+      case None if source.isStreaming => lit(0L)
+      case None => monotonically_increasing_id()
+    })
+    val df = spec.header.emptyFields.fold(withId) { sentinel =>
+      withId.select(withId.columns.map { c =>
+        if (c == ROW_ID) col(c)
+        else when(col(c).cast("string") === sentinel, "")
+          .otherwise(col(c).cast("string")).as(c)
+      }: _*)
+    }
+    val compiler = new RuleCompiler(
+      df.columns.filterNot(_ == ROW_ID).toSeq, spec.header, spec.dateFields.toSet,
+      registry, spec.namespaceUuid)
+    (df, compiler)
+  }
+
+  /** One output table over the prepared input: the kind's compiled plan,
+    * the opt-in number canonicalization, then schema validation when
+    * `validate` is set and the table has a schema. */
+  private def tablePlan(spark: SparkSession, df: DataFrame, compiler: RuleCompiler,
+      tname: String, meta: TableMeta, validate: Boolean): DataFrame = {
+    var out = meta.kind match {
+      case "constant" => execConstant(spark, tname)
+      case "oneToOne" => execOneToOne(df, compiler, tname)
+      case "groupBy" => execGroupBy(df, compiler, tname, meta)
+      case "oneToMany" => execOneToMany(df, compiler, tname, meta)
+    }
+    if (canonicalNumbers) {
+      // reference auto-int/float rendering for un-schema'd string attrs
+      val stringAttrs = out.schema.fields.collect {
+        case f if f.dataType == org.apache.spark.sql.types.StringType &&
+          coerceTypeFor(tname, f.name).isEmpty => f.name
+      }
+      stringAttrs.foreach { a =>
+        out = out.withColumn(a, compiler.canonicalNumber(col(a)))
+      }
+    }
+    if (validate && spec.schemas.contains(tname)) withValidation(out, tname, meta)
+    else out
   }
 
   /** Opt-in reference numeric canonicalization ("007"→"7", "1.50"→"1.5")
@@ -323,51 +332,31 @@ final class AdtlParser private (
       orderCol: Option[String] = None): Map[String, DataFrame] = {
     require(source.isStreaming, "parseStream expects a streaming DataFrame")
     AdtlParser.ensureProgressListener(spark)
-    val groupTables = spec.tables.collect { case (t, m) if m.kind == "groupBy" => t }
     if (groupTables.nonEmpty && orderCol.isEmpty)
       throw new SpecValidationError(
         s"groupBy tables (${groupTables.mkString(", ")}) need an explicit " +
           "orderCol in streaming mode: arrival order is not file order " +
           "across micro-batches")
-    Uuid5Expr.register(spark)
-    var df = orderCol match {
-      case Some(c) => source.withColumn(ROW_ID, col(c).cast("long"))
-      case None => source.withColumn(ROW_ID, lit(0L)) // unused without groupBy
-    }
-    spec.header.emptyFields.foreach { sentinel =>
-      df = df.select(df.columns.map { c =>
-        if (c == ROW_ID) col(c)
-        else when(col(c).cast("string") === sentinel, "")
-          .otherwise(col(c).cast("string")).as(c)
-      }: _*)
-    }
-    val compiler = new RuleCompiler(
-      df.columns.filterNot(_ == ROW_ID).toSeq, spec.header, spec.dateFields.toSet,
-      registry, spec.namespaceUuid)
+    val (df, compiler) = prepareInput(spark, source, orderCol)
     spec.tables.collect {
       case (tname, meta) if meta.kind != "constant" =>
-        val out = meta.kind match {
-          case "oneToOne" => execOneToOne(df, compiler, tname)
-          case "oneToMany" => execOneToMany(df, compiler, tname, meta)
-          case "groupBy" => execGroupBy(df, compiler, tname, meta)
-        }
-        val validated =
-          if (spec.schemas.contains(tname)) {
-            // streaming counterpart of report(): valid/total ride as
-            // OBSERVED metrics on the output — zero extra jobs, read back
-            // from query progress via streamingReport. groupBy tables in
-            // Complete mode re-emit the whole result each batch, so the
-            // latest batch's metrics ARE the batch-report accounting;
-            // stateless tables in Append observe each batch's slice (sum
-            // across progresses for a running total).
-            withValidation(out, tname, meta).observe(
-              s"${AdtlParser.ReportMetricPrefix}$tname",
-              count(lit(1)).as("total"),
-              count(when(col("adtl_valid") === true, lit(1))).as("valid"))
-          } else out
-        tname -> validated
+        val out = tablePlan(spark, df, compiler, tname, meta, validate = true)
+        // streaming counterpart of report(): valid/total ride as OBSERVED
+        // metrics on the output — zero extra jobs, read back from query
+        // progress via streamingReport. groupBy tables in Complete mode
+        // re-emit the whole result each batch, so the latest batch's
+        // metrics ARE the batch-report accounting; stateless tables in
+        // Append observe each batch's slice (sum across progresses for a
+        // running total).
+        tname -> (if (!spec.schemas.contains(tname)) out
+        else out.observe(
+          s"${AdtlParser.ReportMetricPrefix}$tname",
+          count(lit(1)).as("total"),
+          count(when(col("adtl_valid") === true, lit(1))).as("valid")))
     }
   }
+
+  import AdtlParser.{mergeSlices, observedSlices, streamingAcc}
 
   /** Validation accounting for a streaming parse: per-table (valid, total)
     * from the most recent micro-batch that reported the table's observed
@@ -375,20 +364,9 @@ final class AdtlParser private (
     * groupBy tables running in Complete output mode this equals the batch
     * report() accounting of all data seen so far. */
   def streamingReport(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Map[String, (Long, Long)] = {
-    import scala.jdk.CollectionConverters._
-    q.recentProgress.reverseIterator.flatMap { p =>
-      p.observedMetrics.asScala.collect {
-        case (name, row) if name.startsWith(AdtlParser.ReportMetricPrefix) =>
-          name.stripPrefix(AdtlParser.ReportMetricPrefix) ->
-            (row.getAs[Long]("valid"), row.getAs[Long]("total"))
-      }
-    }.foldLeft(Map.empty[String, (Long, Long)]) { (acc, kv) =>
-      if (acc.contains(kv._1)) acc else acc + kv // latest progress wins
-    }
-  }
-
-  import AdtlParser.{mergeSlices, observedSlices, streamingAcc}
+      q: org.apache.spark.sql.streaming.StreamingQuery): Map[String, (Long, Long)] =
+    q.recentProgress.iterator.map(observedSlices)
+      .foldLeft(Map.empty[String, (Long, Long)])(_ ++ _) // latest progress wins
 
   /** Append-mode counterpart: stateless tables (oneToOne/oneToMany) observe
     * each micro-batch's slice, so the running total is the SUM across
@@ -618,15 +596,6 @@ final class AdtlParser private (
     }
   }
 
-  /** Scale-safe overwrite diagnostics for groupBy tables: per table, per
-    * overwrite-path attribute, the number of groups holding MORE THAN ONE
-    * distinct non-empty value — exactly the groups the reference's per-group
-    * "Multiple rows of data found … Data being overwritten" warning fires
-    * for (parser.py:596-615). The reference emits one warning per dirty
-    * group with the group's data attached; at 100 TB that is unbounded
-    * driver output, so this surfaces aggregate counts instead: two
-    * aggregations per table (per-group distinct counts, then a global sum),
-    * and no group's data ever reaches the driver. */
   /** The scrubbed, ROW_ID'd input frame + compiler of the most recent
     * parseDataFrame call — kept so post-parse diagnostics reuse the SAME
     * (cached) frame instead of re-scanning the source, which at 100 TB
@@ -638,33 +607,9 @@ final class AdtlParser private (
 
   /** Opt-in: cache the scrubbed parse input even for single-table specs, so
     * post-parse diagnostics (`-v` overwriteCounts) reuse the materialized
-    * frame instead of re-scanning the source through lineage. Wins over
-    * the policy below. */
+    * frame instead of re-scanning the source through lineage. */
   private var cacheInput: Boolean = false
   def withCachedInput(): this.type = { cacheInput = true; this }
-
-  /** Input materialization policy for multi-table parses:
-    *
-    *  - "auto" (default): cache the scrubbed input when more than one table
-    *    consumes it — the interactive/CLI shape, where the source is one
-    *    modest CSV every table re-reads.
-    *  - "never": skip the cache so EACH table's plan prunes columns at the
-    *    source scan — the 100 TB shape. A full-width cache materializes
-    *    every column once (memory + spill pressure at petabyte inputs and
-    *    no column pruning through InMemoryRelation), while N pruned scans
-    *    each read only the columns that table maps, with the emptyFields
-    *    scrub projection collapsed onto the pruned set by Catalyst.
-    *    Requires an explicit orderCol for groupBy determinism (scan-order
-    *    ids are only stable across re-scans of a single ordered source).
-    *  - "always": cache even single-table parses.
-    */
-  private var inputCachePolicy: String = "auto"
-  def withInputCachePolicy(p: String): this.type = {
-    require(Set("auto", "never", "always")(p),
-      s"unknown input cache policy: $p (auto|never|always)")
-    inputCachePolicy = p
-    this
-  }
 
   /** Overwrite diagnostics for the most recent parseDataFrame/parseCsv call,
     * computed from its cached groupBy input — no second source scan. */
@@ -675,21 +620,19 @@ final class AdtlParser private (
   }
 
   def overwriteCounts(spark: SparkSession, source: DataFrame): Map[String, Map[String, Long]] = {
-    Uuid5Expr.register(spark)
-    var df = source.withColumn(ROW_ID, monotonically_increasing_id())
-    spec.header.emptyFields.foreach { sentinel =>
-      df = df.select(df.columns.map { c =>
-        if (c == ROW_ID) col(c)
-        else when(col(c).cast("string") === sentinel, "")
-          .otherwise(col(c).cast("string")).as(c)
-      }: _*)
-    }
-    val compiler = new RuleCompiler(
-      df.columns.filterNot(_ == ROW_ID).toSeq, spec.header, spec.dateFields.toSet,
-      registry, spec.namespaceUuid)
+    val (df, compiler) = prepareInput(spark, source, None)
     overwriteCountsOn(df, compiler)
   }
 
+  /** Scale-safe overwrite diagnostics for groupBy tables: per table, per
+    * overwrite-path attribute, the number of groups holding MORE THAN ONE
+    * distinct non-empty value — exactly the groups the reference's per-group
+    * "Multiple rows of data found … Data being overwritten" warning fires
+    * for (parser.py:596-615). The reference emits one warning per dirty
+    * group with the group's data attached; at 100 TB that is unbounded
+    * driver output, so this surfaces aggregate counts instead: two
+    * aggregations per table (per-group distinct counts, then a global sum),
+    * and no group's data ever reaches the driver. */
   private def overwriteCountsOn(df: DataFrame,
       compiler: RuleCompiler): Map[String, Map[String, Long]] =
     spec.tables.collect { case (tname, meta) if meta.kind == "groupBy" =>
@@ -788,14 +731,14 @@ final class AdtlParser private (
 
   // ---- sinks ------------------------------------------------------------
 
-  /** CSV with deterministic sorted header, validation columns first, arrays
-    * rendered Python-repr style (parser.py:778-806 parity). */
   /** Look up a parsed table, with the reference's read_table error
     * (parser.py:772-776). */
   def readTable(tables: Map[String, DataFrame], tname: String): DataFrame =
     tables.getOrElse(tname,
       throw new IllegalArgumentException(s"Invalid table name: $tname"))
 
+  /** CSV with deterministic sorted header, validation columns first, arrays
+    * rendered Python-repr style (parser.py:778-806 parity). */
   def writeCsv(tables: Map[String, DataFrame], tname: String, path: String): Unit =
     renderForCsv(readTable(tables, tname)).coalesce(1)
       .write.mode("overwrite").option("header", "true").option("emptyValue", "")

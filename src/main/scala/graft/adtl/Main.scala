@@ -92,12 +92,7 @@ object Main {
         if (verbose) parser.withCachedInput()
         val tables = parser.parseCsv(spark, df, encoding)
         val prefix = output.getOrElse(parser.spec.header.name)
-        tables.keys.foreach { t =>
-          format match {
-            case "parquet" => parser.writeParquet(tables, t, s"$prefix-$t.parquet")
-            case _ => parser.writeCsv(tables, t, s"$prefix-$t.csv")
-          }
-        }
+        parser.save(tables, prefix, format)
         // diagnostics reuse the parse's cached groupBy input — the opt-in
         // flag must not cost a second full source scan at 100 TB
         if (verbose) printOverwriteWarnings(parser.overwriteCounts())

@@ -163,8 +163,6 @@ object Transformations {
       lpad(((aoff % 3600) / 60).cast("long").cast("string"), 2, "0"))
   }
 
-  private def guardEmpty(in: Column, out: Column): Column = when(nonEmpty(in), out)
-
   /** Python str(float) rendering: integral doubles keep the trailing .0. */
   private def pyNum(d: Column): Column =
     when(d === floor(d) && abs(d) < 1e15,

@@ -115,9 +115,9 @@ object Pipeline {
     * ONLY while the frame's estimated natural split count
     * ([[leafBytes]] / `spark.sql.files.maxPartitionBytes`) is below the
     * session width — a 100 TB scan already carries thousands of splits
-    * and skips the exchange entirely, paying nothing. Width is the
-    * leaf-bytes form of the [[cpuWidth]] rule (256 KB of source bytes
-    * per task, clamped to [session width, 8×]). An unavailable estimate
+    * and skips the exchange entirely, paying nothing. Width is
+    * [[cpuWidthLeaf]] (256 KB of source bytes per task, clamped to
+    * [session width, 8×]). An unavailable estimate
     * (≤ 0: no stats, e.g. an RDD-backed frame) leaves the frame alone —
     * the conservative choice at scale; a localCheckpoint leaf DOES
     * carry stats (its block size) and the rebalance may fire on it.
@@ -157,14 +157,8 @@ object Pipeline {
       val naturalSplits = (est + (maxSplit - 1)) / maxSplit
       val parts = sessionWidth(spark)
       if (naturalSplits >= BigInt(parts)) df
-      else {
-        // width keyed to the leaf bytes (the cpuWidth rule at 256 KB of
-        // source bytes per task), clamped to [session width, 8x]
-        val w = ((est + (256L << 10) - 1) / (256L << 10))
-          .min(BigInt(parts * 8)).max(BigInt(parts)).toInt
-        if (cols.isEmpty) df.repartition(w)
-        else df.repartition(w, cols: _*)
-      }
+      else if (cols.isEmpty) df.repartition(cpuWidthLeaf(df))
+      else df.repartition(cpuWidthLeaf(df), cols: _*)
     }
   }
 
@@ -202,7 +196,12 @@ object Pipeline {
     * prefix-sum shape (one corpus-wide window shuffle, one tiny offsets
     * window, one broadcast join back), with every (value, outCol) pair
     * sharing the bucket assignment, the window sort and the offsets
-    * frame — a caller needing k prefix sums pays one pass, not k. */
+    * frame — a caller needing k prefix sums pays one pass, not k.
+    *
+    * Scale bound: the offsets frame is BROADCAST — one row per
+    * (`partCols` group, bucket), so |partCols groups| × `buckets` rows
+    * ship to every executor. Few groups (or none) is the intended shape;
+    * a high-cardinality `partCols` makes the broadcast that large. */
   private[ops] def runningSumN(df: DataFrame, orderCol: String,
       values: Seq[(Column, String)], buckets: Int,
       partCols: Seq[String] = Nil, tieCols: Seq[String] = Nil,

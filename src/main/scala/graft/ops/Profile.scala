@@ -33,7 +33,7 @@ object Profile {
     * (1.0E7) and other engines' (%g / 1e+07) disagree above 10^7, while
     * a fixed-scale decimal renders identically everywhere. */
   def profileTable(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, FloatType}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructType}
     val cols = df.columns.toSeq
     def render(c: String) = df.schema(c).dataType match {
       case DoubleType | FloatType =>
@@ -66,12 +66,15 @@ object Profile {
     // equality equals the column type's distinct semantics: float and
     // double normalize -0.0 → 0.0 (x + 0.0) to match Spark's
     // NormalizeFloatingNumbers aggregation-key behavior; any NaN
-    // renders "NaN", matching NaN-equals-NaN distinct semantics; every
-    // other type's CAST AS STRING is injective.
+    // renders "NaN", matching NaN-equals-NaN distinct semantics; arrays
+    // and structs render through to_json (CAST AS STRING prints
+    // array("a, b") and array("a", "b") both as [a, b]); every other
+    // type's CAST AS STRING is injective (binary keeps its raw bytes).
     def distinctRender(c: String): org.apache.spark.sql.Column =
       df.schema(c).dataType match {
         case DoubleType => (col(c) + lit(0.0)).cast("string")
         case FloatType => (col(c) + lit(0.0f)).cast("string")
+        case _: ArrayType | _: StructType => to_json(col(c))
         case _ => col(c).cast("string")
       }
     val aggsA = cols.flatMap { c =>

@@ -310,7 +310,7 @@ class AdtlParserSpec extends SparkSpec {
     assert(out.getAs[String]("c") == "x")
   }
 
-  test("input cache policy: 'never' prunes to source scans, same outputs") {
+  test("input cache: multi-table parses and withCachedInput cache the scrubbed input") {
     val spec = """{
       |  "adtl": {"name": "s", "description": "d", "tables": {
       |    "a": {"kind": "oneToOne"},
@@ -319,49 +319,32 @@ class AdtlParserSpec extends SparkSpec {
       |  "b": [{"if": {"y": {"!=": ""}}, "name": "y", "value": {"field": "y"}}]
       |}""".stripMargin
     val df = strDf(Seq("x", "y"), Seq(Seq("1", "a"), Seq("2", ""), Seq("3", "b")))
-    def collectAll(p: AdtlParser) = {
-      val t = p.parseDataFrame(spark, df)
-      (t("a").collect().toList, t("b").collect().toList,
-        t("a").queryExecution.optimizedPlan.collect {
-          case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
-        }.nonEmpty)
-    }
-    // never FIRST (Spark's CacheManager substitutes cached plans into any
-    // later matching fragment, so the auto parse must not run yet):
-    // plans read the source directly, each table's column pruning reaches
-    // the scan (the 100 TB shape)
-    val (aDirect, bDirect, directHasIMR) = collectAll(
-      AdtlParser.fromJsonString(spec).withInputCachePolicy("never"))
-    assert(!directHasIMR)
-    // default (auto): multi-table spec caches the scrubbed input
-    val (aCached, bCached, cachedHasIMR) = collectAll(AdtlParser.fromJsonString(spec))
-    assert(cachedHasIMR)
-    assert(aCached == aDirect && bCached == bDirect)
-    intercept[IllegalArgumentException](
-      AdtlParser.fromJsonString(spec).withInputCachePolicy("sometimes"))
-  }
-
-  test("input cache policy 'never' + groupBy enforces an explicit orderCol") {
-    val spec = """{
+    def cached(t: DataFrame): Boolean = t.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+    }.nonEmpty
+    // two tables read one input: it is cached, and the rows are unchanged
+    val t = AdtlParser.fromJsonString(spec).parseDataFrame(spark, df)
+    assert(cached(t("a")) && cached(t("b")))
+    assert(t("a").collect().map(_.getString(0)).sorted.toList == List("1", "2", "3"))
+    assert(t("b").collect().map(r => (r.getAs[String]("name"), r.getAs[String]("value")))
+      .sorted.toList == List(("y", "a"), ("y", "b")))
+    // a single-table groupBy parse caches only when asked (the CLI's -v)
+    val single = """{
       |  "adtl": {"name": "s", "description": "d", "tables": {
       |    "t": {"kind": "groupBy", "groupBy": "sid", "aggregation": "lastNotNull"}}},
       |  "t": {"sid": {"field": "sid"}, "v": {"field": "v"}}
       |}""".stripMargin
-    val df = strDf(Seq("seq", "sid", "v"), Seq(Seq("1", "a", "x"), Seq("2", "a", "y")))
-    // without the cache, scan-order ids are recomputed per action — refuse
-    val e = intercept[IllegalArgumentException] {
-      AdtlParser.fromJsonString(spec).withInputCachePolicy("never")
-        .parseDataFrame(spark, df)
-    }
-    assert(e.getMessage.contains("inputCachePolicy=never"))
-    // an explicit order column restores determinism without a cache
-    val out = AdtlParser.fromJsonString(spec).withInputCachePolicy("never")
-      .parseDataFrame(spark, df, orderCol = Some("seq"))("t").collect()
-    assert(out.length == 1 && out(0).getAs[String]("v") == "y")
-    // withCachedInput pins one scan — scan order is stable, policy allowed
-    val cached = AdtlParser.fromJsonString(spec).withInputCachePolicy("never")
-      .withCachedInput().parseDataFrame(spark, df)("t").collect()
-    assert(cached.length == 1 && cached(0).getAs[String]("v") == "y")
+    val src = strDf(Seq("sid", "v"), Seq(Seq("a", "x"), Seq("a", "y")))
+    val plain = AdtlParser.fromJsonString(single)
+    plain.parseDataFrame(spark, src)
+    assert(plain.lastParseInput.get._1.storageLevel ==
+      org.apache.spark.storage.StorageLevel.NONE)
+    val pinned = AdtlParser.fromJsonString(single).withCachedInput()
+    val rows = pinned.parseDataFrame(spark, src)("t").collect()
+    assert(pinned.lastParseInput.get._1.storageLevel !=
+      org.apache.spark.storage.StorageLevel.NONE)
+    assert(rows.map(r => (r.getAs[String]("sid"), r.getAs[String]("v"))).toList ==
+      List(("a", "y")))
   }
 
   test("re-parsing on one parser releases the previous parse's cached input") {
@@ -370,7 +353,7 @@ class AdtlParserSpec extends SparkSpec {
       |    "a": {"kind": "oneToOne"}, "b": {"kind": "oneToOne"}}},
       |  "a": {"x": {"field": "x"}}, "b": {"x": {"field": "x"}}
       |}""".stripMargin
-    val p = AdtlParser.fromJsonString(spec) // auto policy: 2 tables → cached
+    val p = AdtlParser.fromJsonString(spec) // two tables → cached
     p.parseDataFrame(spark, strDf(Seq("x"), Seq(Seq("1"))))
     val first = p.lastParseInput.get._1
     assert(first.storageLevel != org.apache.spark.storage.StorageLevel.NONE)

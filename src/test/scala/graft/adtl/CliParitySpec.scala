@@ -71,6 +71,18 @@ class CliParitySpec extends SparkSpec {
     assert(out.count() == 2)
   }
 
+  test("parse --format with an unknown format fails before writing any table") {
+    val e = intercept[IllegalArgumentException] {
+      withOutCapture {
+        Main.main(Array("parse", s"$tmp/spec.toml", s"$tmp/data.csv",
+          "-o", s"$tmp/fx", "--format", "xlsx"))
+      }
+    }
+    assert(e.getMessage == "Invalid format: xlsx")
+    assert(!Files.exists(java.nio.file.Paths.get(s"$tmp/fx-t.csv")))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$tmp/fx-t.xlsx")))
+  }
+
   test("parse --save-report replaces the printed report (cli.py:79-89)") {
     val out = withOutCapture {
       Main.main(Array("parse", s"$tmp/spec.toml", s"$tmp/data.csv",

@@ -464,6 +464,18 @@ class AnalyticsSpec extends SparkSpec {
       ("s", "string", 3L, 2L, 2L, "x", "y")))
   }
 
+  test("profileTable: array and struct distincts do not collide through their string cast") {
+    import spark.implicits._
+    // CAST AS STRING renders both arrays as "[a, b]"; binary casts keep
+    // their raw bytes, so two invalid UTF-8 values stay distinct
+    val df = Seq((Seq("a, b"), Array[Byte](-1)), (Seq("a", "b"), Array[Byte](-2)))
+      .toDF("arr", "bin")
+      .withColumn("st", struct(col("arr")))
+    val nd = Profile.profileTable(df).collect()
+      .map(r => r.getString(0) -> r.getLong(4)).toMap
+    assert(nd == Map("arr" -> 2L, "bin" -> 2L, "st" -> 2L))
+  }
+
   test("profileTableApprox: HLL estimate within bound, exact base columns, all-null = 0") {
     import spark.implicits._
     // 5000 ids (distinct), a 7-value categorical, a half-null double with
