@@ -310,7 +310,7 @@ class AdtlParserSpec extends SparkSpec {
     assert(out.getAs[String]("c") == "x")
   }
 
-  test("input cache: multi-table parses and withCachedInput cache the scrubbed input") {
+  test("input cache: multi-table parse and withCachedInput cache the input") {
     val spec = """{
       |  "adtl": {"name": "s", "description": "d", "tables": {
       |    "a": {"kind": "oneToOne"},
